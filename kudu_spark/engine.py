@@ -1211,6 +1211,21 @@ def _bounds_overlap(lo1, hi1, lo2, hi2) -> bool:
     return starts_below(lo1, hi2) and starts_below(lo2, hi1)
 
 
+# table properties whose features were removed; setting one raises
+# instead of being silently ignored. Logs that already store one still
+# open: the engine just never reads it.
+REMOVED_PROPERTIES = frozenset({
+    "delta_scan_plan", "delta_bloom", "delta_bloom_min_rows", "delta_bloom_fpp",
+    "dirty_cache", "auto_compact_write_factor", "auto_compact_small_file_bytes",
+    "auto_compact_min_small_files",
+})
+
+
+def check_property(key: str) -> None:
+    if key in REMOVED_PROPERTIES:
+        raise KuduSparkError(f"table property {key!r} was removed and has no effect")
+
+
 class Alterer:
     """Accumulates schema/partition changes; ``apply()`` is one atomic
     commit. Type/nullability changes are rejected like Kudu
@@ -1274,7 +1289,8 @@ class Alterer:
     def set_property(self, key: str, value) -> "Alterer":
         """Table-level extra config (AlterTable SET ..., client.h
         KuduTableAlterer::AlterExtraConfig); stored in commit props and
-        folded into TableState.props."""
+        folded into TableState.props. Removed properties raise."""
+        check_property(key)
         self._props[key] = value
         return self
 

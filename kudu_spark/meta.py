@@ -329,12 +329,11 @@ class FileEntry:
     kind: str = "base"  # "base" | "delta"
     min_pk: list | None = None  # min/max of first PK column (JSON-able)
     max_pk: list | None = None
-    # delta-key bloom sidecar (kind == "delta" only): path of a
-    # serialized bloom filter over the FULL delta key set of the commit
-    # that wrote this file, built once at flush like Kudu's bloomfiles
-    # (cfile/bloomfile.cc, tablet/deltafile.cc) so scans filter base
-    # rows without rebuilding O(delta) state per query. Shared by every
-    # delta file of the commit; GC'd by vacuum when unreferenced.
+    # presence-index sidecar (``pk_bloom_cols`` tables): path of the
+    # commit's ``.pidx`` key-hash index (plans/presence.py), shared by
+    # every file of the commit and GC'd by vacuum when unreferenced.
+    # Older logs may hold a legacy ``.bloom`` delta-key sidecar here:
+    # scans ignore it; vacuum and fsck still check and collect it.
     bloom: str | None = None
     # delete-mark classification derived from the file's own parquet
     # __deleted footer stats at flush (kind == "delta" only): "L" =

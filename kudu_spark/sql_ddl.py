@@ -51,6 +51,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
+from kudu_spark.engine import REMOVED_PROPERTIES, check_property
 from kudu_spark.errors import KuduSparkError, SchemaError
 from kudu_spark.sql_dml import (
     _find_top_level_keyword,
@@ -415,6 +416,9 @@ def _run_create(engine: "Engine", text: str):
         raise KuduSparkError(f"unexpected tokens in CREATE TABLE: {rest.strip()[:60]!r}")
     if not pk:
         raise SchemaError("Kudu tables require a PRIMARY KEY")
+    # before the table exists: a rejected property must not leave one
+    for k in props:
+        check_property(k)
 
     src = None
     if select_sql:
@@ -898,7 +902,8 @@ def show_create_table(engine: "Engine", name: str) -> str:
         out += f"\nCOMMENT {_quote(st.props['comment'])}"
     out += "\nSTORED AS KUDU"
     props = {k: v for k, v in st.props.items()
-             if not k.startswith("_") and k != "comment"}
+             if not k.startswith("_") and k != "comment"
+             and k not in REMOVED_PROPERTIES}
     if props:
         kv = ", ".join(f"{_quote(k)} = {_quote(v)}" for k, v in sorted(props.items()))
         out += f"\nTBLPROPERTIES ({kv})"

@@ -933,18 +933,10 @@ class Table:
             # files of a hash/range partition hold the same key space
             # — Kudu's rowset locality): G groups = G broadcast anti
             # joins over disjoint slices of the base, still zero base
-            # shuffle. (An earlier bloom-split variant shipped the
-            # bitset as an array literal; py4j literal construction is
-            # O(seconds) past ~100k words, so it could never scale
-            # past the broadcast threshold it was meant to relieve.)
-            # delta_scan_plan: "auto" (groups -> bloom -> shuffle),
-            # "bloom" / "shuffle" force the respective past-cap plan
-            plan_pref = str(st.props.get("delta_scan_plan", "auto")).lower()
-            groups = (
-                None if plan_pref in ("bloom", "shuffle")
-                else self._group_dirty_by_broadcast(
-                    dirty_base, dirty_delta, 64 * max(1, len(pk)), max(bcast, 0)
-                )
+            # shuffle. Past DELTA_MAX_GROUPS (or with broadcasting
+            # disabled) the plan is the shuffled anti join below.
+            groups = self._group_dirty_by_broadcast(
+                dirty_base, dirty_delta, 64 * max(1, len(pk)), max(bcast, 0)
             )
             if groups is not None:
                 parts = []
@@ -978,44 +970,21 @@ class Table:
                 for p in parts[1:]:
                     df_dirty = df_dirty.unionByName(p)
             else:
-                # past the broadcast budget. `delta_scan_plan=bloom`
-                # opts into the commit-time sidecar split
-                # (plans/delta_bloom.py): base rows failing the native
-                # membership probe are PROVABLY untouched and stream
-                # straight from parquet; only the ~|delta|-sized
-                # positive slice pays an exact anti join, and the base
-                # is never shuffled at any delta size — the right
-                # SHAPE for a multi-executor cluster, where base
-                # shuffle means network. It is NOT the local default:
-                # the round-6 ×400 A/B (SCALE.md) measured its
-                # fixed costs (probe-literal deserialization per task,
-                # two base scans) above the shuffled anti's on one
-                # shared JVM.
+                # past the broadcast budget: plain anti join — the
+                # planner shuffles base + keys, predicates still push
+                # below the join. Write-proportional maintenance is the
+                # real remedy in this regime; this plan only serves
+                # tables that disabled it.
+                df_base = self._read_files(st, dirty_base, per_file=per_file)
+                df_delta = self._read_files(st, dirty_delta, per_file=per_file)
+                # SHUFFLE_HASH on the key (build) side: hashing the
+                # O(delta) keys beats sort-merge, which would also
+                # SORT the full base stream
+                keys = df_delta.select(*pk).hint("SHUFFLE_HASH")
                 df_dirty = (
-                    self._bloom_split_plan(st, dirty_base, dirty_delta,
-                                           merge_delta_files, pk,
-                                           per_file=per_file)
-                    if plan_pref == "bloom" else None
+                    df_base.join(keys, on=pk, how="left_anti")
+                    .unionByName(merge_delta_files(dirty_delta, df_delta))
                 )
-                if df_dirty is None:
-                    # default past-cap plan (measured fastest locally):
-                    # plain anti join — the planner shuffles base +
-                    # keys, predicates still push below the join.
-                    # Write-proportional maintenance is the real remedy
-                    # in this regime; this plan only serves tables
-                    # that disabled it.
-                    df_base = self._read_files(st, dirty_base,
-                                               per_file=per_file)
-                    df_delta = self._read_files(st, dirty_delta,
-                                                per_file=per_file)
-                    # SHUFFLE_HASH on the key (build) side: hashing the
-                    # O(delta) keys beats sort-merge, which would also
-                    # SORT the full base stream
-                    keys = df_delta.select(*pk).hint("SHUFFLE_HASH")
-                    df_dirty = (
-                        df_base.join(keys, on=pk, how="left_anti")
-                        .unionByName(merge_delta_files(dirty_delta, df_delta))
-                    )
         elif (dirty_base and dirty_delta
               and delta_rows * 4 <= base_rows and 0 < key_bytes <= max(bcast, 0)):
             # reinsert-after-delete present: a base row may outrank
@@ -1050,11 +1019,9 @@ class Table:
             # friendly join plans above serve the query directly, so
             # a 100 TB dirty backlog never tries to materialize here.
             dirty_bytes = sum(f.bytes for f in dirty)
-            cache_on = str(st.props.get("dirty_cache", "true")).lower() not in (
-                "false", "0", "no")
-            if per_file is not None and per_file_tag is None:
-                cache_on = False  # unidentified derivation: never cache
-            if cache_on and 0 < dirty_bytes <= self.DIRTY_CACHE_MAX_BYTES:
+            # an unidentified per-file derivation is never cached
+            if ((per_file is None or per_file_tag is not None)
+                    and 0 < dirty_bytes <= self.DIRTY_CACHE_MAX_BYTES):
                 sch_ident = tuple((c.name, c.type) for c in st.schema.columns)
                 ck = ("dirty", tuple(sorted(f.path for f in dirty)), sch_ident,
                       per_file_tag)
@@ -1100,9 +1067,6 @@ class Table:
             df = df.drop(SEQ_COL, DEL_COL)
         return df
 
-    # bloom-split anti join: key sets past this bound skip the bloom
-    # (its word-array literal would bloat every task's plan) and take
-    # the plain sort-merge anti join instead
     # grouped-broadcast merge knobs: a group's delta keys must fit one
     # broadcast (>= this floor even under a tiny configured threshold);
     # past DELTA_MAX_GROUPS the plan falls back to the shuffled anti
@@ -1166,60 +1130,6 @@ class Table:
         if len(bins) > self.DELTA_MAX_GROUPS:
             return None
         return [(b, d) for _, b, d in bins]
-
-    # more distinct per-commit blooms than this and the probe
-    # expression (k hashes each) stops being cheap — maintenance keeps
-    # the live delta-commit count far below it in steady state
-    DELTA_BLOOM_MAX_EXPRS = 6
-
-    def _bloom_split_plan(self, st: TableState, dirty_base: list["FileEntry"],
-                          dirty_delta: list["FileEntry"], merge_delta_files, pk,
-                          per_file=None):
-        """Merge plan over the commit-time delta-key bloom sidecars
-        (plans/delta_bloom.py; ≈ Kudu consulting rowset bloomfiles,
-        tablet/tablet.cc:116-124):
-
-            clean     = base WHERE NOT might_contain(xxhash64(pk))
-            contested = base WHERE might_contain ANTI JOIN delta keys
-            out       = clean UNION contested UNION dedup(deltas)
-
-        No false negatives -> `clean` is exact; false positives ride
-        the anti join, both of whose sides are O(delta). The base
-        parquet is read twice (once per split side) but shuffled
-        NEVER — 2x scan IO on dirty partitions beats a full sort-merge
-        shuffle by a widening margin as the base grows. Requires every
-        delta file to carry a sidecar and few distinct commits (ORed
-        probes); returns None otherwise — callers fall back."""
-        from functools import reduce
-        from operator import or_
-
-        from kudu_spark.plans import delta_bloom
-
-        paths = {f.bloom for f in dirty_delta}
-        if None in paths or len(paths) > self.DELTA_BLOOM_MAX_EXPRS:
-            return None
-        h = F.xxhash64(*[F.col(c) for c in pk])
-        probes = []
-        for rel in sorted(paths):
-            c = delta_bloom.might_contain_sidecar(
-                self.spark, self.root, rel, h, tuple(pk)
-            )
-            if c is None:
-                return None
-            probes.append(c)
-        contested = reduce(or_, probes)
-        df_base = self._read_files(st, dirty_base, per_file=per_file)
-        df_delta = self._read_files(st, dirty_delta, per_file=per_file)
-        # SHUFFLE_HASH on the key (build) side: both anti-join inputs
-        # are O(delta), and hashing beats sorting them (measured ~1.5x
-        # on the 6M-key shape); a sort-merge's per-partition sorts are
-        # pure overhead for a build set this shape
-        keys = df_delta.select(*pk).hint("SHUFFLE_HASH")
-        return (
-            df_base.where(~contested)
-            .unionByName(df_base.where(contested).join(keys, on=pk, how="left_anti"))
-            .unionByName(merge_delta_files(dirty_delta, df_delta))
-        )
 
     def _split_disjoint_bases(self, st: TableState, clean: list[FileEntry],
                               dirty: list[FileEntry]):
@@ -2742,76 +2652,13 @@ class Table:
                 )
             )
         senv.rmtree(staging)
-        # sidecar precedence: pk_bloom_cols tables index EVERY commit —
-        # base and delta alike, so mutating tables keep their O(batch)
-        # key probe (Kudu's per-rowset presence covers deltas too,
-        # tablet/tablet.cc:116-124) — and the fenced delta-key bloom is
-        # only built for tables without a presence index
+        # pk_bloom_cols tables index EVERY commit — base and delta
+        # alike, so mutating tables keep their O(batch) key probe
+        # (Kudu's per-rowset presence covers deltas too,
+        # tablet/tablet.cc:116-124)
         if st.props.get("pk_bloom_cols"):
             self._attach_presence_index(st, entries, tombstones=has_tombstones)
-        elif kind == "delta":
-            self._attach_delta_bloom(st, entries)
         return entries
-
-    # deltas below this many rows skip the sidecar: the grouped
-    # broadcast plan handles small key sets in one 64 MB build, and
-    # the sidecar's extra Spark job (~0.3 s) would tax every tiny
-    # mutation commit for nothing
-    DELTA_BLOOM_MIN_ROWS = 65536
-
-    def _attach_delta_bloom(self, st: TableState, entries: list[FileEntry]) -> None:
-        """Build + persist the commit's delta-key bloom sidecar
-        (plans/delta_bloom.py; ≈ Kudu building bloomfiles once at
-        delta flush, cfile/bloomfile.cc). One bloom covers the FULL
-        key set of this commit across partitions — scans OR together
-        the (few, maintenance-bounded) per-commit blooms. Failure is
-        never fatal: scans without a sidecar take the broadcast or
-        shuffled plan."""
-        from kudu_spark.plans import delta_bloom
-
-        total = sum(e.rows for e in entries)
-        floor = int(st.props.get("delta_bloom_min_rows", self.DELTA_BLOOM_MIN_ROWS))
-        if not entries or total < floor:
-            return
-        # build only for tables that will USE the bloom plan
-        # (delta_scan_plan=bloom, or delta_bloom=true explicitly):
-        # the build is a real per-commit Spark job, wasted on tables
-        # whose scans take the broadcast/shuffle plans
-        pref = str(st.props.get("delta_bloom", "auto")).lower()
-        if pref in ("false", "0", "no"):
-            return
-        if pref == "auto" and str(
-            st.props.get("delta_scan_plan", "auto")
-        ).lower() != "bloom":
-            return
-        try:
-            pk = st.schema.pk
-            keys = self.spark.read.parquet(
-                *[self._data_path(e.path) for e in entries]
-            ).select(F.xxhash64(*[F.col(c) for c in pk]).alias("h"))
-            fpp = float(st.props.get("delta_bloom_fpp", delta_bloom.DEFAULT_FPP))
-            data = delta_bloom.build_bloom(keys, total, fpp)
-            if data is None:
-                # opted-in table silently losing its bloom plan would
-                # be invisible until scan times regress — say so
-                import logging
-
-                logging.getLogger("kudu_spark.bloom").warning(
-                    "delta bloom sidecar for %s commit seq=%s unavailable "
-                    "(Spark internals missing?): bloom-split scans fall "
-                    "back to broadcast/shuffle plans", self.name,
-                    entries[0].seq,
-                )
-                return
-            rel = delta_bloom.write_sidecar(self.root, DATA_DIR, entries[0].seq, data)
-            for e in entries:
-                e.bloom = rel
-        except Exception as ex:
-            import logging
-
-            logging.getLogger("kudu_spark.bloom").warning(
-                "delta bloom sidecar for %s skipped: %s", self.name, ex
-            )
 
     def _attach_presence_index(self, st: TableState, entries: list[FileEntry],
                                tombstones: bool = False) -> None:
@@ -3496,15 +3343,18 @@ class Table:
             checks = [F.sum(F.when(null_pk, 1).otherwise(0)).alias("nulls")]
             if nn is not None:
                 checks.append(F.sum(F.when(nn, 1).otherwise(0)).alias("nn"))
-            val_src = batch  # kept for the rare failed-observation path
             obs = Observation()
             batch = batch.observe(obs, *checks)
             entries = self._write_files(batch, st, seq_for(st.version + 1), "base")
             vals = observed_metrics(obs)
-            if vals is None:
+            if vals is None and entries:
                 # unusable observation (failed/pruned execution):
-                # re-validate explicitly — one extra job, rare path
-                vals = val_src.agg(*checks).collect()[0].asDict()
+                # re-validate the staged files — exactly the rows this
+                # commit would publish, never a re-run of the caller's
+                # (possibly nondeterministic) plan. One extra job.
+                vals = (self._read_files(st, entries, with_seq=False)
+                        .agg(*checks).collect()[0].asDict())
+            vals = vals or {}
             if vals.get("nulls"):
                 self._discard(entries)
                 raise SchemaError(
@@ -3920,7 +3770,8 @@ class Table:
                 spent += c["cost_bytes"]
         return out
 
-    # auto-compaction defaults (overridable per table via props)
+    # auto-compaction defaults; the first three are overridable per
+    # table via auto_compact_min_ratio / _min_delta_bytes / _budget_bytes
     AUTO_COMPACT_MIN_RATIO = 0.05
     AUTO_COMPACT_MIN_DELTA_BYTES = 1 << 20
     AUTO_COMPACT_BUDGET_BYTES = 256 << 20
@@ -3933,6 +3784,14 @@ class Table:
     # MaintenanceManager achieves the same by prioritizing ops by
     # perf-improvement score as writes land (tablet/maintenance_manager.h).
     AUTO_COMPACT_WRITE_FACTOR = 16
+    # small-file repacking (auto_compact_small_files=true): a partition
+    # repacks once it holds MIN_SMALL_FILES base files under
+    # SMALL_FILE_BYTES, so each byte is rewritten at most once per that
+    # many commits until its file outgrows the threshold — bounded
+    # write amplification, and the presence-sidecar count (one per live
+    # file-commit) stays bounded per partition instead of O(batches)
+    AUTO_COMPACT_SMALL_FILE_BYTES = 32 << 20
+    AUTO_COMPACT_MIN_SMALL_FILES = 8
 
     def _maybe_auto_compact(self, commit_delta_bytes: int = 0) -> None:
         """Maintenance trigger after a mutation commit. Kudu runs the
@@ -4017,19 +3876,17 @@ class Table:
             # write-proportional: a commit that wrote W delta bytes may
             # fold up to factor*W — big writes drain their own backlog
             # instead of leaving dozens of fixed-budget sweeps behind
-            factor = int(props.get("auto_compact_write_factor",
-                                   self.AUTO_COMPACT_WRITE_FACTOR))
-            budget = max(budget, factor * int(commit_delta_bytes))
+            budget = max(budget,
+                         self.AUTO_COMPACT_WRITE_FACTOR * int(commit_delta_bytes))
             tot: dict = {}
             dl: dict = {}
             smalls: dict = {}
-            small_thresh = int(props.get("auto_compact_small_file_bytes", 32 << 20))
             for f in st.files:
                 key = (tuple(f.partition.get("hash", [])), f.partition.get("range"))
                 tot[key] = tot.get(key, 0) + f.bytes
                 if f.kind == "delta":
                     dl[key] = dl.get(key, 0) + f.bytes
-                elif f.bytes < small_thresh:
+                elif f.bytes < self.AUTO_COMPACT_SMALL_FILE_BYTES:
                     smalls[key] = smalls.get(key, 0) + 1
             ranked = sorted(
                 (k for k in dl if dl[k] >= ratio * tot[k]),
@@ -4038,22 +3895,16 @@ class Table:
             if sum(dl[k] for k in ranked) < floor:
                 ranked = []
             # small-file bin-packing for append-heavy tables (Kudu's
-            # rowset merge compaction, compaction_policy.h — inserts
-            # make many small DiskRowSets that maintenance merges).
-            # Opt-in (`auto_compact_small_files=true`): a partition
-            # repacks once it holds >= min_small small base files, so
-            # each byte is rewritten at most once per min_small
-            # commits until its file outgrows the threshold — bounded
-            # write amplification, and the pk-bloom sidecar count
-            # (one per live file-commit) stays O(min_small) per
-            # partition instead of O(batches).
+            # rowset merge compaction, compaction_policy.h), opt-in via
+            # `auto_compact_small_files=true`
             if str(props.get("auto_compact_small_files", "false")).lower() in (
                 "true", "1", "yes"
             ):
-                min_small = int(props.get("auto_compact_min_small_files", 8))
                 have = set(ranked)
                 ranked += sorted(
-                    (k for k in smalls if smalls[k] >= min_small and k not in have),
+                    (k for k in smalls
+                     if smalls[k] >= self.AUTO_COMPACT_MIN_SMALL_FILES
+                     and k not in have),
                     key=lambda k: -smalls[k],
                 )
             if not ranked:

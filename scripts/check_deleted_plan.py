@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, "/root/repo")
 from kudu_spark.engine import Engine  # noqa: E402
 from kudu_spark.queries import load  # noqa: E402
+from kudu_spark.table import Table  # noqa: E402
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 spark = (
@@ -72,9 +73,13 @@ if "row_number" in plan:
     print(plan[:4000])
     sys.exit(1)
 
-# at-scale mode (dirty_cache=false ~ past the resident budget): the
-# anti-join plan with predicates pushed into the parquet scans
-eng.alter_table("lineitem").set_property("dirty_cache", "false").apply()
+# at-scale mode (a zero resident budget ~ past it): the anti-join
+# plan with predicates pushed into the parquet scans
+budget = Table.DIRTY_CACHE_MAX_BYTES
+Table.DIRTY_CACHE_MAX_BYTES = 0
+# the ALTER commit evicts the resident frames, which Spark's cache
+# manager would otherwise substitute into the new plan
+eng.alter_table("lineitem").set_property("auto_compact", "false").apply()
 t = eng.table("lineitem")
 plan2 = q6(t.scan())._jdf.queryExecution().executedPlan().toString()
 n_windows2 = plan2.count("WindowGroupLimit") + plan2.count("Window ")
@@ -85,8 +90,7 @@ if "row_number" in plan2 or not pushed:
     print("!! at-scale deleted plan regressed")
     print(plan2[:4000])
     sys.exit(1)
-eng.alter_table("lineitem").set_property("dirty_cache", "true").apply()
-t = eng.table("lineitem")
+Table.DIRTY_CACHE_MAX_BYTES = budget
 
 # engine q6 value must match a duckdb-free oracle: parquet source with
 # the same mutations applied via plain DataFrame ops

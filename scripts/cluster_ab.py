@@ -1,16 +1,11 @@
 #!/usr/bin/env python
-"""Cross-executor A/B of the past-broadcast-cap dirty-scan plans.
+"""Cross-executor A/B of the dirty-scan merge plans.
 
-The round-6 ×400 A/B (SCALE.md) measured the bloom-split sidecar plan
-LOSING to the shuffled anti join on one shared local[32] JVM, and the
-demotion recorded a caveat: on a real cluster the trade should
-reverse, because (a) the probe literal rides the task binary and
-deserializes once per executor TASK SET in parallel instead of
-serially in one JVM, and (b) the shuffled anti join's base exchange
-crosses MACHINES. This script tests that claim on the closest thing a
-single box offers: a standalone master + N separate worker JVMs, so
-shuffles serialize/deserialize across process boundaries and each
-executor deserializes the probe independently.
+Compares the default plan (grouped broadcast anti join while the delta
+keys fit the broadcast budget) against the shuffled anti join it falls
+back to past that budget, on the closest thing a single box offers to
+a cluster: a standalone master + N separate worker JVMs, so shuffles
+serialize/deserialize across process boundaries.
 
 Usage (cluster must already be running — see SCALE.md §cross-executor):
 
@@ -22,9 +17,9 @@ Usage (cluster must already be running — see SCALE.md §cross-executor):
     done
     python scripts/cluster_ab.py --mult 200
 
-Loads ×mult lineitem into an engine table (maintenance off,
-delta_bloom=true), upserts 10% of keys, then times q1/q6 under each
-forced plan (shuffle / bloom / grouped-broadcast when admissible).
+Loads ×mult lineitem into an engine table (maintenance off), upserts
+10% of keys, then times q1/q6 with the shuffled anti join forced
+(spark.sql.autoBroadcastJoinThreshold=-1) and with the default plan.
 Prints one JSON line.
 """
 
@@ -104,8 +99,7 @@ def main() -> None:
         "lineitem", [("l_rowid", "bigint", False)] + cols, pk=["l_rowid"],
         hash_partitions=[{"columns": ["l_rowid"], "buckets": max(8, args.mult)}],
     )
-    eng.alter_table("lineitem").set_property("auto_compact", "false") \
-        .set_property("delta_bloom", "true").apply()
+    eng.alter_table("lineitem").set_property("auto_compact", "false").apply()
     t0 = time.perf_counter()
     t.insert(li)
     load_sec = round(time.perf_counter() - t0, 2)
@@ -138,8 +132,10 @@ def main() -> None:
     out = {"metric": "cluster_ab", "mult": args.mult, "rows": rows,
            "executors": n_exec, "executor_cores": args.executor_cores,
            "load_sec": load_sec, "upsert_10pct_sec": upsert_sec, "plans": {}}
-    for plan in ("shuffle", "bloom", "auto"):
-        eng.alter_table("lineitem").set_property("delta_scan_plan", plan).apply()
+    bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    for plan in ("shuffle", "auto"):
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                       "-1" if plan == "shuffle" else bcast)
         t = eng.table("lineitem")
         res = {}
         for name, q in (("q1", q1), ("q6", q6)):

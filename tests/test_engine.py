@@ -3,10 +3,14 @@ time travel, and the FIXTURES.md §A `simple` schema."""
 
 from __future__ import annotations
 
+import dataclasses
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from kudu_spark.engine import Engine
+import kudu_spark.table as table_mod
+from kudu_spark.engine import REMOVED_PROPERTIES, Engine
 from kudu_spark.errors import (
     DuplicateKeyError,
     KuduSparkError,
@@ -446,7 +450,6 @@ def test_txn_consistent_sql_sees_neither_or_both(engine, spark):
     pins each participant below its txn commit while the durable
     marker is unresolved (≈ Kudu commit-timestamp MVCC)."""
     import json
-    import os
     import uuid
 
     ddl = "key int, int_val int, string_val string"
@@ -525,7 +528,6 @@ def test_consistent_versions_pins_unpublished_at_probe_head(engine, spark):
     after consistent_versions() returns is then excluded, closing the
     probe-to-read torn-read window."""
     import json
-    import os
     import uuid
 
     ddl = "key int, int_val int, string_val string"
@@ -568,8 +570,6 @@ def test_fsck_clean_and_corrupted(engine, spark, tmp_path):
     tools/tool_action_fs.cc:261-308): clean tables report ok; a
     deleted manifest file, a truncated file, and lost-race debris are
     each flagged; --repair removes only the debris."""
-    import os
-
     t = engine.create_table("f1", SIMPLE, pk=["key"])
     t.insert(simple_rows(spark, range(100)))
     t.upsert(simple_rows(spark, range(50, 60), base=1))
@@ -606,7 +606,6 @@ def test_fsck_keeps_txn_staged_files(engine, spark):
     orphans — recover() still needs them (the marker references them,
     not the commit log yet)."""
     import json
-    import os
 
     engine.create_table("fa", SIMPLE, pk=["key"])
     t = engine.table("fa")
@@ -637,7 +636,6 @@ def test_fsck_keeps_txn_staged_files(engine, spark):
 
 
 def test_fsck_flags_bad_sidecar(engine, spark):
-    import os
     import shutil
 
     engine.create_table("f2", [("k", "bigint", False)], pk=["k"])
@@ -820,7 +818,6 @@ def test_fsck_repair_sheds_bad_sidecar_refs(engine, spark):
     is OK, and compact(full=True) rebuilds exact coverage. Never a
     direct rebuild (it could drop an absorbed delete family and
     resurrect deleted keys)."""
-    import os
     import shutil
 
     engine.create_table("fr", [("k", "bigint", False)], pk=["k"])
@@ -935,3 +932,139 @@ def test_maintenance_daemon_counts_table_errors(engine, spark):
         stats = engine.stop_maintenance()
     assert stats["sweeps"] >= 2
     assert stats["errors"] >= 2  # one per sweep, every sweep
+
+
+WIDE = [("k", "bigint", False), ("v", "double", True), ("s", "string", True)]
+
+
+def _wide_rows(spark, keys, v, s):
+    return keys.select(F.col("id").alias("k"), F.lit(v).alias("v"), F.lit(s).alias("s"))
+
+
+def test_time_travel_and_tokens_with_live_deltas(engine, spark):
+    """Time travel and scan tokens over a table whose deltas are still
+    live (auto-compaction off), on the default merge plan."""
+    engine.create_table(
+        "ttd", WIDE, pk=["k"], hash_partitions=[{"columns": ["k"], "buckets": 8}])
+    engine.alter_table("ttd").set_property("auto_compact", "false").apply()
+    t = engine.table("ttd")
+    t.insert(spark.range(20_000).select(
+        F.col("id").alias("k"), (F.col("id") * 1.5).alias("v"),
+        F.concat(F.lit("s"), F.col("id")).alias("s"),
+    ))
+    v1 = t.version
+    t.upsert(_wide_rows(spark, spark.range(0, 20_000, 5), 9.0, "u"))
+    assert any(f.kind == "delta" for f in t.state().files)
+    assert t.scan(version=v1).where(F.col("s") == "u").count() == 0
+    assert sum(t.token_to_df(tok).count() for tok in t.scan_tokens()) == 20_000
+
+
+def test_write_proportional_budget_drains_inline(engine, spark):
+    """A large delta commit folds its own backlog inline (budget scales
+    with the commit's delta bytes) instead of leaving dozens of
+    fixed-budget sweeps behind."""
+    t = engine.create_table(
+        "wp", WIDE, pk=["k"], hash_partitions=[{"columns": ["k"], "buckets": 4}]
+    )
+    # tiny fixed budget that could never cover the table; the
+    # write-proportional factor must override it
+    engine.alter_table("wp").set_property("auto_compact_budget_bytes", "1") \
+        .set_property("auto_compact_min_delta_bytes", "0").apply()
+    t = engine.table("wp")
+    t.insert(spark.range(30_000).select(
+        F.col("id").alias("k"), F.lit(1.0).alias("v"), F.lit("x").alias("s")))
+    t.upsert(spark.range(0, 30_000, 2).select(
+        F.col("id").alias("k"), F.lit(2.0).alias("v"), F.lit("y").alias("s")))
+    st = t.state()
+    assert all(f.kind == "base" for f in st.files), "inline fold did not drain"
+    assert t.scan().where(F.col("s") == "y").count() == 15_000
+
+
+def test_removed_property_rejected(engine):
+    engine.create_table("rp", SIMPLE, pk=["key"])
+    assert len(REMOVED_PROPERTIES) == 8
+    for key in REMOVED_PROPERTIES:
+        with pytest.raises(KuduSparkError, match="removed"):
+            engine.alter_table("rp").set_property(key, "1")
+    assert not REMOVED_PROPERTIES & set(engine.table("rp").state().props)
+
+
+def test_removed_property_rejected_in_sql(engine):
+    engine.sql("CREATE TABLE rps (k BIGINT, v STRING, PRIMARY KEY (k)) STORED AS KUDU")
+    with pytest.raises(KuduSparkError, match="removed"):
+        engine.sql("ALTER TABLE rps SET TBLPROPERTIES ('delta_scan_plan' = 'bloom')")
+    assert "delta_scan_plan" not in engine.table("rps").state().props
+    # CREATE rejects before the table exists
+    with pytest.raises(KuduSparkError, match="removed"):
+        engine.sql("CREATE TABLE rpc (k BIGINT, PRIMARY KEY (k)) STORED AS KUDU "
+                   "TBLPROPERTIES ('dirty_cache' = 'false')")
+    assert "rpc" not in engine.list_tables()
+
+
+def test_legacy_removed_properties_still_open(engine, spark):
+    """A log written before the removal may store removed properties
+    and reference delta-key ``.bloom`` sidecars: the table still opens
+    and scans correctly, fsck passes, and vacuum collects the sidecar
+    once compaction unreferences it."""
+    engine.create_table(
+        "leg", WIDE, pk=["k"], hash_partitions=[{"columns": ["k"], "buckets": 4}])
+    engine.alter_table("leg").set_property("auto_compact", "false").apply()
+    t = engine.table("leg")
+    t.insert(_wide_rows(spark, spark.range(1000), 1.0, "x"))
+    t.upsert(_wide_rows(spark, spark.range(0, 1000, 10), 2.0, "u"))
+    t.delete(spark.range(0, 1000, 100).select(F.col("id").alias("k")))
+    st = t.state()
+    deltas = [f for f in st.files if f.kind == "delta"]
+    rel = os.path.join("data", f"{deltas[0].seq:012d}-legacy.bloom")
+    with open(os.path.join(t.root, rel), "wb") as fh:
+        fh.write(b"\0" * 64)
+    t._commit(st, "legacy", [dataclasses.replace(f, bloom=rel) for f in deltas],
+              removes=[f.path for f in deltas],
+              props={"delta_scan_plan": "bloom", "delta_bloom": "true",
+                     "dirty_cache": "false"},
+              restamp_seq=False)
+
+    t = engine.table("leg")
+    st = t.state()
+    assert st.props["delta_scan_plan"] == "bloom"
+    assert {f.bloom for f in st.files if f.kind == "delta"} == {rel}
+    df = t.scan()
+    assert df.count() == 990
+    got = {r.k: r.s for r in df.where(F.col("k").isin(0, 10, 11, 100)).collect()}
+    assert got == {10: "u", 11: "x"}
+    rep = engine.fsck("leg")["leg"]
+    assert rep["ok"] and rep["bad_sidecars"] == [] and rep["orphans"] == []
+    # the regenerated DDL drops them, so it still runs
+    ddl = engine.sql("SHOW CREATE TABLE leg").collect()[0][0]
+    assert "'auto_compact' = 'false'" in ddl and "delta_scan_plan" not in ddl
+    engine.sql(ddl.replace("CREATE TABLE leg", "CREATE TABLE leg2"))
+    t.compact()
+    assert not any(f.bloom for f in engine.table("leg").state().files)
+    engine.table("leg").vacuum(force=True)
+    assert not os.path.exists(os.path.join(t.root, rel))
+    assert engine.table("leg").scan().count() == 990
+
+
+def test_insert_fallback_validates_staged_files(engine, spark, monkeypatch):
+    """An unusable observation makes insert re-validate the staged
+    files, not the caller's plan: a NULL key still raises, and the
+    staged files are discarded."""
+    t = engine.create_table("fb", SIMPLE, pk=["key"])
+    t.insert(simple_rows(spark, range(10)))
+    data_dir = os.path.join(t.root, "data")
+    before = set(os.listdir(data_dir))
+    monkeypatch.setattr(table_mod, "observed_metrics", lambda obs: None)
+    read, real_read = [], table_mod.Table._read_files
+
+    def spy(self, st, files, *a, **kw):
+        read.append([f.path for f in files])
+        return real_read(self, st, files, *a, **kw)
+
+    monkeypatch.setattr(table_mod.Table, "_read_files", spy)
+    batch = spark.createDataFrame(
+        [(100, 1, "a"), (None, 2, "b")], "key int, int_val int, string_val string")
+    with pytest.raises(SchemaError, match="NULL primary key"):
+        t.insert(batch)
+    assert read and all(p.startswith("data") and p not in before for p in read[0])
+    assert set(os.listdir(data_dir)) == before
+    assert engine.table("fb").scan().count() == 10

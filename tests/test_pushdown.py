@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kudu_spark.engine import Engine
+from kudu_spark.table import Table
 
 SCHEMA = [("k", "bigint", False), ("v", "int", True), ("s", "string", True)]
 
@@ -659,21 +660,22 @@ def test_no_cartesian_or_row_udf_anywhere(spark, sf_dir):
     assert not bad, f"plan contract violations: {bad}"
 
 
-def test_pure_delete_deltas_keep_pushdown(engine, spark):
+def test_pure_delete_deltas_keep_pushdown(engine, spark, monkeypatch):
     """Delete-aware dirty planning (≈ Kudu separating DELETE
     application from row materialization, tablet/delta_relevancy.h):
     a live-delta commit followed by a newer pure-delete commit must
     NOT fall back to the global row_number window — non-key predicates
     keep pushing into both the base and the live-delta parquet scans,
-    and the delete keys ride an anti join. ``dirty_cache = false``
-    pins the AT-SCALE plan (past the resident-dirty budget); the
-    under-budget cached shape is pinned separately."""
+    and the delete keys ride an anti join. A zero
+    ``DIRTY_CACHE_MAX_BYTES`` pins the AT-SCALE plan (past the
+    resident-dirty budget); the under-budget cached shape is pinned
+    separately."""
     t = engine.create_table(
         "pdel", SCHEMA, pk=["k"],
         hash_partitions=[{"columns": ["k"], "buckets": 4}],
     )
-    engine.alter_table("pdel").set_property("auto_compact", "false") \
-        .set_property("dirty_cache", "false").apply()
+    monkeypatch.setattr(Table, "DIRTY_CACHE_MAX_BYTES", 0)
+    engine.alter_table("pdel").set_property("auto_compact", "false").apply()
     t = engine.table("pdel")  # keep the deltas live
     t.insert(spark.createDataFrame(
         [(k, k * 10, f"s{k}") for k in range(1000)], "k bigint, v int, s string"
@@ -793,7 +795,7 @@ def test_zorder_clustering_tightens_both_dimensions(engine, spark):
         t2.insert(spark.createDataFrame([(n * 2, 1, 1, "x")],
                                         "k bigint, a bigint, b bigint, pad string"))
 
-def test_dirty_cache_resident_scan(engine, spark):
+def test_dirty_cache_resident_scan(engine, spark, monkeypatch):
     """Under the resident-dirty budget (DIRTY_CACHE_MAX_BYTES), the
     merged dirty state of a snapshot is persisted once and repeat
     scans read it as an InMemoryRelation — no per-query broadcast
@@ -827,8 +829,10 @@ def test_dirty_cache_resident_scan(engine, spark):
     rows2 = sorted((r["k"], r["v"], r["s"]) for r in df2.collect())
     assert rows2 == rows1
     # reference: the uncached at-scale plan returns identical rows
-    # (the ALTER commit also evicts the cached frames)
-    engine.alter_table("pdelc").set_property("dirty_cache", "false").apply()
+    # (the ALTER commit evicts the cached frames; Spark's cache manager
+    # would otherwise substitute the persisted plan)
+    monkeypatch.setattr(Table, "DIRTY_CACHE_MAX_BYTES", 0)
+    engine.alter_table("pdelc").set_property("auto_compact", "false").apply()
     df3 = engine.table("pdelc").scan(filters=[("v", ">=", 100)])
     plan3 = plan_of(df3)
     # the predicate reaches parquet again (the persisted KEY frame may
