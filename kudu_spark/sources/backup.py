@@ -154,6 +154,7 @@ def restore(engine, backup_root: str, table_name: str,
     backup, then its incrementals in window order. ``through_version``
     stops early (point-in-time restore to a backed-up window boundary,
     seeding from an older full when needed)."""
+    from kudu_spark.engine import REMOVED_PROPERTIES
     from kudu_spark.meta import Schema
     from kudu_spark.table import AUTO_INC_COL
 
@@ -202,13 +203,14 @@ def restore(engine, backup_root: str, table_name: str,
         # table used in that window. Props set AFTER the full backup
         # (e.g. vector_cell_cols from a later train_vector_cells)
         # would otherwise be lost even though the artifact restored;
-        # internal counters (auto_inc_next) stay with the new table.
+        # internal counters (auto_inc_next) stay with the new table,
+        # and properties whose features were removed are dropped.
         # (Props REMOVED between windows stay set — the alter surface
         # is additive here; removal between backups is rare and
         # harmless for every prop we ship.)
         wmeta = json.loads(benv.read_bytes(os.path.join(path, META_NAME)))
         wprops = {k: v for k, v in (wmeta.get("props") or {}).items()
-                  if k != "auto_inc_next"}
+                  if k != "auto_inc_next" and k not in REMOVED_PROPERTIES}
         if wprops != applied_props:
             alt = engine.alter_table(dst.name)
             for k, v in wprops.items():

@@ -72,6 +72,7 @@ def copy_table(engine, src_name: str, dst_name: str, dst_engine=None,
     dst_engine = dst_engine or engine
     st = src.state()
     sch = st.schema
+    from kudu_spark.engine import REMOVED_PROPERTIES
     from kudu_spark.table import AUTO_INC_COL
 
     pk = [c for c in sch.pk if c != AUTO_INC_COL]
@@ -110,7 +111,7 @@ def copy_table(engine, src_name: str, dst_name: str, dst_engine=None,
     import os
 
     props = {k: str(v) for k, v in (st.props or {}).items()
-             if k != "auto_inc_next"}
+             if k != "auto_inc_next" and k not in REMOVED_PROPERTIES}
     if props:
         alt = dst_engine.alter_table(dst_name)
         for k, v in props.items():

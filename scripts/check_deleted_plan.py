@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, "/root/repo")
 from kudu_spark.engine import Engine  # noqa: E402
 from kudu_spark.queries import load  # noqa: E402
-from kudu_spark.table import Table  # noqa: E402
+from kudu_spark.table import Table, _evict_key_frames  # noqa: E402
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 spark = (
@@ -77,10 +77,10 @@ if "row_number" in plan:
 # plan with predicates pushed into the parquet scans
 budget = Table.DIRTY_CACHE_MAX_BYTES
 Table.DIRTY_CACHE_MAX_BYTES = 0
-# the ALTER commit evicts the resident frames, which Spark's cache
-# manager would otherwise substitute into the new plan
-eng.alter_table("lineitem").set_property("auto_compact", "false").apply()
+# evict the resident frames, which Spark's cache manager would
+# otherwise substitute into the new plan
 t = eng.table("lineitem")
+_evict_key_frames(t.root)
 plan2 = q6(t.scan())._jdf.queryExecution().executedPlan().toString()
 n_windows2 = plan2.count("WindowGroupLimit") + plan2.count("Window ")
 print("windows in deleted-state q6 plan (at-scale):", n_windows2)

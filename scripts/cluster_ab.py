@@ -18,9 +18,11 @@ Usage (cluster must already be running — see SCALE.md §cross-executor):
     python scripts/cluster_ab.py --mult 200
 
 Loads ×mult lineitem into an engine table (maintenance off), upserts
-10% of keys, then times q1/q6 with the shuffled anti join forced
-(spark.sql.autoBroadcastJoinThreshold=-1) and with the default plan.
-Prints one JSON line.
+10% of keys, then times q1/q6 with the shuffled anti join forced and
+with the default plan. The shuffle arm sets
+spark.sql.autoBroadcastJoinThreshold=-1 for the whole session, so every
+join in that arm loses broadcast. Each arm starts with the table's
+cached key frames evicted. Prints one JSON line.
 """
 
 from __future__ import annotations
@@ -57,6 +59,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from kudu_spark.engine import Engine
+    from kudu_spark.table import _evict_key_frames
     from kudu_spark.queries import load
 
     spark = (
@@ -137,6 +140,7 @@ def main() -> None:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
                        "-1" if plan == "shuffle" else bcast)
         t = eng.table("lineitem")
+        _evict_key_frames(t.root)
         res = {}
         for name, q in (("q1", q1), ("q6", q6)):
             res[name] = round(min(bench_once(q(t.scan())) for _ in range(3)), 3)

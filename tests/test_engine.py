@@ -19,6 +19,7 @@ from kudu_spark.errors import (
     TableExistsError,
     TableNotFoundError,
 )
+from kudu_spark.sources import backup, copy_table, restore
 
 SIMPLE = [("key", "int", False), ("int_val", "int", False), ("string_val", "string", True)]
 
@@ -1001,11 +1002,12 @@ def test_removed_property_rejected_in_sql(engine):
     assert "rpc" not in engine.list_tables()
 
 
-def test_legacy_removed_properties_still_open(engine, spark):
+def test_legacy_removed_properties_still_open(engine, spark, tmp_path):
     """A log written before the removal may store removed properties
     and reference delta-key ``.bloom`` sidecars: the table still opens
-    and scans correctly, fsck passes, and vacuum collects the sidecar
-    once compaction unreferences it."""
+    and scans correctly, fsck passes, copy and backup/restore drop the
+    removed properties, and vacuum collects the sidecar once
+    compaction unreferences it."""
     engine.create_table(
         "leg", WIDE, pk=["k"], hash_partitions=[{"columns": ["k"], "buckets": 4}])
     engine.alter_table("leg").set_property("auto_compact", "false").apply()
@@ -1038,6 +1040,12 @@ def test_legacy_removed_properties_still_open(engine, spark):
     ddl = engine.sql("SHOW CREATE TABLE leg").collect()[0][0]
     assert "'auto_compact' = 'false'" in ddl and "delta_scan_plan" not in ddl
     engine.sql(ddl.replace("CREATE TABLE leg", "CREATE TABLE leg2"))
+    backup(t, str(tmp_path / "bk"))  # stores them, as a pre-removal backup would
+    for dst in (copy_table(engine, "leg", "leg_copy"),
+                restore(engine, str(tmp_path / "bk"), "leg", new_name="leg_r")):
+        props = dst.state().props
+        assert props["auto_compact"] == "false" and not REMOVED_PROPERTIES & set(props)
+        assert dst.scan().count() == 990
     t.compact()
     assert not any(f.bloom for f in engine.table("leg").state().files)
     engine.table("leg").vacuum(force=True)

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kudu_spark.engine import Engine
-from kudu_spark.table import Table
+from kudu_spark.table import Table, _evict_key_frames
 
 SCHEMA = [("k", "bigint", False), ("v", "int", True), ("s", "string", True)]
 
@@ -829,10 +829,10 @@ def test_dirty_cache_resident_scan(engine, spark, monkeypatch):
     rows2 = sorted((r["k"], r["v"], r["s"]) for r in df2.collect())
     assert rows2 == rows1
     # reference: the uncached at-scale plan returns identical rows
-    # (the ALTER commit evicts the cached frames; Spark's cache manager
-    # would otherwise substitute the persisted plan)
+    # (evict the cached frames; Spark's cache manager would otherwise
+    # substitute the persisted plan)
     monkeypatch.setattr(Table, "DIRTY_CACHE_MAX_BYTES", 0)
-    engine.alter_table("pdelc").set_property("auto_compact", "false").apply()
+    _evict_key_frames(t.root)
     df3 = engine.table("pdelc").scan(filters=[("v", ">=", 100)])
     plan3 = plan_of(df3)
     # the predicate reaches parquet again (the persisted KEY frame may
