@@ -24,6 +24,12 @@ row values (standard SQL UPDATE semantics). The computed batch then
 feeds the same ``Table.insert/upsert/update/delete`` paths the Python
 API uses (row_operations.proto:36-43), so PK probes, immutable-column
 checks, partition routing and commit revalidation are identical.
+Statements inside a ``BEGIN`` block and every MERGE clause stage
+through the same validation steps (``Table._stage_<op>``, driven by
+``writer.Transaction``): an UPDATE or a MERGE matched-update stages
+the PK plus the assigned columns only, and errors exactly where the
+same UPDATE outside a transaction does (NULL into a non-nullable
+column, a SET of an immutable column).
 
 IGNORE maps to Kudu's *_IGNORE ops: INSERT IGNORE skips present keys,
 UPDATE IGNORE skips absent keys and immutable-column sets, DELETE
@@ -353,6 +359,14 @@ def _parse_assignments(set_part: str, pk: list[str], schema_names: list[str]):
     return out
 
 
+def _update_select(ta: str, pk: list[str], assigns) -> str:
+    """SELECT list of an UPDATE batch: the target's PK plus only the
+    assigned columns, so the batch goes through Table.update's checks
+    (absent keys, immutable and non-nullable columns)."""
+    return ", ".join([*[f"{ta}.{k}" for k in pk],
+                      *[f"({rhs}) AS {col}" for col, rhs in assigns]])
+
+
 def _alias_of(from_clause: str, alias: str) -> str | None:
     """Resolve ``alias`` to its table name inside a FROM clause of
     comma- and/or JOIN-separated ``table [AS] alias`` items. Returns
@@ -403,18 +417,7 @@ def _run_update(engine: "Engine", text: str, txn=None):
     assigns = _parse_assignments(set_part, pk, st.schema.names)
 
     engine._register_views(text)
-    amap = dict(assigns)
-    if txn is not None:
-        # Transaction has no per-column update op: stage a FULL-ROW
-        # upsert (unassigned columns carry their old values) — the
-        # same equivalence MERGE's matched-update uses
-        sel = ", ".join(
-            [f"{ta}.{k}" for k in pk]
-            + [f"({amap[c]}) AS {c}" if c in amap else f"{ta}.{c} AS {c}"
-               for c in st.schema.non_pk_names])
-    else:
-        sel = ", ".join([*[f"{ta}.{k}" for k in pk],
-                         *[f"({rhs}) AS {col}" for col, rhs in assigns]])
+    sel = _update_select(ta, pk, assigns)
     rel = from_clause if from_clause else f"{name} {ta}"
     stmt = f"SELECT {sel} FROM {rel}" + (f" WHERE {where}" if where else "")
     computed = engine.spark.sql(stmt)
@@ -440,7 +443,7 @@ def _run_update(engine: "Engine", text: str, txn=None):
             raise KuduSparkError(
                 "IGNORE variants are not supported inside BEGIN blocks")
         if n:
-            txn.upsert(name, batch)
+            txn.update(name, batch)
         return "UPDATE", name, n, -1
     if n:
         # rows come from the snapshot, so error-mode missing-key checks
@@ -513,7 +516,8 @@ def _run_delete(engine: "Engine", text: str, txn=None):
 # violation (SQL standard; checked with one aggregate probe). All
 # clause batches are computed against the pre-merge snapshot views,
 # then staged into ONE Table Transaction — atomic visibility, same
-# revalidating commit as the Python API.
+# validation and revalidating commit as the Python API (a matched
+# UPDATE stages Table.update's per-column op, not a full-row upsert).
 
 
 def _parse_alias(s: str) -> tuple[str, str | None, str]:
@@ -691,18 +695,13 @@ def _run_merge(engine: "Engine", text: str, txn=None):
         for i, c in enumerate(clauses):
             w = where_of(i)
             if c["action"] == "update":
-                assigns = _parse_assignments(c["set"], pk, st.schema.names)
-                amap = dict(assigns)
-                sel = ", ".join(
-                    [f"{ta}.{k}" for k in pk]
-                    + [f"({amap[col]}) AS {col}" if col in amap else f"{ta}.{col} AS {col}"
-                       for col in st.schema.non_pk_names]
-                )
+                sel = _update_select(
+                    ta, pk, _parse_assignments(c["set"], pk, st.schema.names))
                 batch = spark.sql(f"SELECT {sel} {join_from}"
                                   + (f" WHERE {w}" if w else ""))
                 n = batch.count()
                 if n:
-                    part.upsert(batch)
+                    part.update(batch)
             elif c["action"] == "delete":
                 sel = ", ".join(f"{ta}.{k} AS {k}" for k in pk)
                 batch = spark.sql(f"SELECT {sel} {join_from}"

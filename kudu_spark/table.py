@@ -29,7 +29,9 @@ java/kudu-spark/.../KuduWriteOptions.scala:31-46).
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 import re
 import time as _time
@@ -3212,19 +3214,51 @@ class Table:
         return self._snapshot_overlapping(st, batch).select(*st.schema.pk)
 
     @staticmethod
-    def _null_violation_cond(st: TableState, names: list[str]):
-        """OR-condition true on a row that would publish NULL into a
-        non-nullable column among ``names`` — the reference rejects
-        these with InvalidArgument on every write path
-        (row_operations.cc:559 insert/upsert, :706 update). Returns
-        None when no named column is non-nullable."""
-        cond = None
-        for c in names:
-            if c == AUTO_INC_COL or st.schema.col(c).nullable:
-                continue
-            x = F.col(c).isNull()
-            cond = x if cond is None else (cond | x)
-        return cond
+    def _any_null(cols: list[str]):
+        """OR of ``isNull`` over ``cols`` (None when empty) — the one
+        place the write paths build their NULL-key and non-nullable
+        conditions. The reference rejects both with InvalidArgument on
+        every write path (row_operations.cc:652 keys, :559
+        insert/upsert, :706 update)."""
+        conds = [F.col(c).isNull() for c in cols]
+        return functools.reduce(operator.or_, conds) if conds else None
+
+    @classmethod
+    def _null_checks(cls, st: TableState, keys: list[str]) -> list:
+        """Validation aggregates of the insert/upsert staging steps:
+        ``nulls`` counts rows with a NULL among ``keys``, ``nn`` (only
+        when the schema has a non-nullable non-key column) rows with a
+        NULL in one. ``_raise_null_violations`` reads them."""
+        pk = st.schema.pk
+        checks = [F.sum(F.when(cls._any_null(keys), 1).otherwise(0)).alias("nulls")]
+        nn = cls._any_null([c for c in st.schema.names
+                            if c not in pk and not st.schema.col(c).nullable])
+        if nn is not None:
+            checks.append(F.sum(F.when(nn, 1).otherwise(0)).alias("nn"))
+        return checks
+
+    @staticmethod
+    def _raise_null_violations(vals: dict) -> None:
+        """Raise for the counts of ``_null_checks`` (plus upsert's
+        ``min_auto``), whether aggregated eagerly or observed on the
+        write job."""
+        if vals.get("nulls"):
+            raise SchemaError(
+                f"batch holds {vals['nulls']} row(s) with NULL primary key"
+            )
+        min_auto = vals.get("min_auto")
+        if min_auto is not None and min_auto <= 0:
+            # row_operations.cc:543-546
+            raise SchemaError(
+                "auto-incrementing column value must be greater than zero"
+            )
+        if vals.get("nn"):
+            # row_operations.cc:559 — also catches an UPSERT omitting a
+            # non-nullable column whose declared default is NULL
+            raise SchemaError(
+                "NULL value not allowed for non-nullable column "
+                f"({vals['nn']} row(s))"
+            )
 
     def _discard(self, entries: list[FileEntry]) -> None:
         """Unlink files written for a commit attempt that lost the
@@ -3249,7 +3283,10 @@ class Table:
         absent-key checks and auto-increment assignment all read the
         snapshot, so a conflicting writer may have invalidated them
         (Kudu re-validates per row at apply time on the tablet leader;
-        our unit of revalidation is the batch)."""
+        our unit of revalidation is the batch). A commit that fails for
+        any other reason discards the files too, unless the log shows
+        the commit landed anyway (an IO error after the atomic
+        publish)."""
         try:
             return self._commit(st, op, entries, removes=removes, props=props, retries=1)
         except ConcurrentCommitError:
@@ -3257,8 +3294,26 @@ class Table:
             if _attempts <= 1:
                 raise
             return retry_fn(_attempts - 1)
+        except Exception:
+            from kudu_spark.meta import read_log
+
+            paths = {e.path for e in entries}
+            if not any(a.get("file", {}).get("path") in paths
+                       for c in read_log(self.root, min_version=st.version)
+                       for a in c.get("actions", [])):
+                self._discard(entries)
+            raise
 
     # -- mutations ---------------------------------------------------------------
+    #
+    # Each op is a private staging step plus a thin public wrapper.
+    # ``_stage_<op>(st, df, mode, seq)`` validates the batch against
+    # ``st``, writes its files at manifest ``seq`` and returns
+    # ``(entries, props)`` — the props the commit must publish — or
+    # discards its own files and raises. The wrappers commit the staged
+    # files with revalidation; writer.Transaction stages through the
+    # very same steps, so a transaction's ops validate exactly like
+    # direct ones.
 
     def insert(self, df: DataFrame, mode: str = "error",
                handle_schema_drift: bool = False, _attempts: int = 5) -> int:
@@ -3267,39 +3322,32 @@ class Table:
         ``handle_schema_drift`` auto-adds unknown batch columns first
         (KuduWriteOptions.handleSchemaDrift)."""
         assert mode in ("error", "ignore")
+        st = self._auto_add_columns(df) if handle_schema_drift else self.state()
+        entries, props = self._stage_insert(st, df, mode, seq_for(st.version + 1))
+        return self._commit_revalidated(
+            st, "insert", entries,
+            lambda a: self.insert(df, mode, handle_schema_drift, _attempts=a),
+            props=props or None, _attempts=_attempts,
+        )
+
+    def _stage_insert(self, st: TableState, df: DataFrame, mode: str,
+                      seq: int) -> tuple[list[FileEntry], dict]:
         if AUTO_INC_COL in df.columns:
             # row_operations.cc:528-529 — the counter is server-assigned
             raise SchemaError(
                 "auto-incrementing column should not be set for "
                 "INSERT/INSERT_IGNORE operations"
             )
-        st = self._auto_add_columns(df) if handle_schema_drift else self.state()
         batch = self._validate_batch(st, df)
         pk = st.schema.pk
         logical_pk = [c for c in pk if c != AUTO_INC_COL]
-        props = {}
+        checks = self._null_checks(st, logical_pk)
         if any(c.name == AUTO_INC_COL for c in st.schema.columns):
             # non-unique PK: duplicates are fine, NULLs are not — one
-            # validation job over the pre-counter batch (key NULLs:
-            # row_operations.cc:652; non-nullable: :559)
-            null_pk = None
-            for c in logical_pk:
-                cond = F.col(c).isNull()
-                null_pk = cond if null_pk is None else (null_pk | cond)
-            nn = self._null_violation_cond(st, [c for c in st.schema.names if c not in pk])
-            checks = [F.sum(F.when(null_pk, 1).otherwise(0)).alias("nulls")]
-            if nn is not None:
-                checks.append(F.sum(F.when(nn, 1).otherwise(0)).alias("nn"))
-            agg = batch.agg(*checks).collect()[0]
-            if agg.nulls:
-                raise SchemaError(
-                    f"batch holds {agg.nulls} row(s) with NULL primary key"
-                )
-            if nn is not None and agg.nn:
-                raise SchemaError(
-                    "NULL value not allowed for non-nullable column "
-                    f"({agg.nn} row(s))"
-                )
+            # validation job over the pre-counter batch
+            self._raise_null_violations(batch.agg(*checks).collect()[0].asDict())
+            # ids come from st.props, so a transaction's second insert
+            # (staged against its own running counter) gets fresh ones
             base = int(st.props.get("auto_inc_next", 1))
             # monotonically_increasing_id allocates (partition << 33) +
             # row, so a batch with more than STRIDE>>33 (= 128) input
@@ -3312,40 +3360,24 @@ class Table:
             batch = batch.withColumn(
                 AUTO_INC_COL, (F.lit(base) + F.monotonically_increasing_id()).cast("bigint")
             ).select(*st.schema.names)
-            props["auto_inc_next"] = base + AUTO_INC_STRIDE
-            entries = self._write_files(batch, st, seq_for(st.version + 1), "base")
-        else:
-            # STAGE-WRITE FIRST, validate from the staged files
-            # (VERDICT r14 #4): the old shape persisted the full batch
-            # and paid an eager validation aggregate (count +
-            # count_distinct + null checks) BEFORE the write — a whole
-            # extra pass plus a batch-sized cache footprint per
-            # insert. Now the batch streams straight into its staged
-            # base files (computed exactly once, never persisted);
-            # null checks ride the write job as observed metrics
-            # (CollectMetrics, same pattern as upsert), the row count
-            # comes from the staged parquet footers, and the exact
-            # duplicate-PK check is ONE count_distinct over the staged
-            # files' PK columns — a pruned columnar read of just the
-            # key bytes, not a second full-batch pass. A violation
-            # discards the (unpublished, manifest-invisible) staged
-            # files and raises the same error classes the eager path
-            # did; INSERT_IGNORE with actual dups/collisions rewrites
-            # from the staged files (rare path, still never recomputes
-            # the caller's batch plan).
-            from pyspark.sql import Observation
+            return (self._write_files(batch, st, seq, "base"),
+                    {"auto_inc_next": base + AUTO_INC_STRIDE})
+        # STAGE-WRITE FIRST, validate from the staged files (VERDICT
+        # r14 #4): the batch streams straight into its staged base
+        # files (computed exactly once, never persisted); null checks
+        # ride the write job as observed metrics, the row count comes
+        # from the staged parquet footers, and the exact duplicate-PK
+        # check is ONE count_distinct over the staged files' PK columns
+        # — a pruned columnar read of just the key bytes, not a second
+        # full-batch pass. Any error discards the (unpublished,
+        # manifest-invisible) staged files; INSERT_IGNORE with actual
+        # dups/collisions rewrites from the staged files (rare path,
+        # still never recomputes the caller's batch plan).
+        from pyspark.sql import Observation
 
-            null_pk = None
-            for c in logical_pk:
-                cond = F.col(c).isNull()
-                null_pk = cond if null_pk is None else (null_pk | cond)
-            nn = self._null_violation_cond(st, [c for c in st.schema.names if c not in pk])
-            checks = [F.sum(F.when(null_pk, 1).otherwise(0)).alias("nulls")]
-            if nn is not None:
-                checks.append(F.sum(F.when(nn, 1).otherwise(0)).alias("nn"))
-            obs = Observation()
-            batch = batch.observe(obs, *checks)
-            entries = self._write_files(batch, st, seq_for(st.version + 1), "base")
+        obs = Observation()
+        entries = self._write_files(batch.observe(obs, *checks), st, seq, "base")
+        try:
             vals = observed_metrics(obs)
             if vals is None and entries:
                 # unusable observation (failed/pruned execution):
@@ -3354,18 +3386,7 @@ class Table:
                 # (possibly nondeterministic) plan. One extra job.
                 vals = (self._read_files(st, entries, with_seq=False)
                         .agg(*checks).collect()[0].asDict())
-            vals = vals or {}
-            if vals.get("nulls"):
-                self._discard(entries)
-                raise SchemaError(
-                    f"batch holds {vals['nulls']} row(s) with NULL primary key")
-            if nn is not None and vals.get("nn"):
-                self._discard(entries)
-                # row_operations.cc:559
-                raise SchemaError(
-                    "NULL value not allowed for non-nullable column "
-                    f"({vals['nn']} row(s))"
-                )
+            self._raise_null_violations(vals or {})
             n = sum(e.rows for e in entries)
             staged_keys = (
                 self._read_files(st, entries, with_seq=False).select(*pk)
@@ -3379,7 +3400,6 @@ class Table:
                 ).collect()[0][0]
                 if n != nd:
                     if mode == "error":
-                        self._discard(entries)
                         raise DuplicateKeyError(
                             f"batch contains {n - nd} duplicate primary key(s)"
                         )
@@ -3404,7 +3424,6 @@ class Table:
                     if not hit:
                         existing = None  # probe positives, zero real collisions
                     elif mode == "error":
-                        self._discard(entries)
                         raise DuplicateKeyError(
                             f"key already present: {hit[0].asDict()}")
             if need_dedup or existing is not None:
@@ -3419,15 +3438,13 @@ class Table:
                     clean = clean.dropDuplicates(pk)
                 if existing is not None:
                     clean = clean.join(existing, on=logical_pk, how="left_anti")
-                rewritten = self._write_files(
-                    clean, st, seq_for(st.version + 1), "base")
+                rewritten = self._write_files(clean, st, seq, "base")
                 self._discard(entries)
                 entries = rewritten
-        return self._commit_revalidated(
-            st, "insert", entries,
-            lambda a: self.insert(df, mode, handle_schema_drift, _attempts=a),
-            props=props or None, _attempts=_attempts,
-        )
+        except BaseException:
+            self._discard(entries)
+            raise
+        return entries, {}
 
     def insert_ignore(self, df: DataFrame) -> int:
         return self.insert(df, mode="ignore")
@@ -3442,6 +3459,17 @@ class Table:
         of an existing row errors; UPSERT_IGNORE keeps the old value."""
         assert mode in ("error", "ignore")
         st = self._auto_add_columns(df) if handle_schema_drift else self.state()
+        entries, _ = self._stage_upsert(st, df, mode, seq_for(st.version + 1))
+        v = self._commit_revalidated(
+            st, "upsert", entries,
+            lambda a: self.upsert(df, mode, handle_schema_drift, _attempts=a),
+            _attempts=_attempts,
+        )
+        self._maybe_auto_compact(sum(e.bytes for e in entries))
+        return v
+
+    def _stage_upsert(self, st: TableState, df: DataFrame, mode: str,
+                      seq: int) -> tuple[list[FileEntry], dict]:
         pk = st.schema.pk
         has_auto = any(c.name == AUTO_INC_COL for c in st.schema.columns)
         if has_auto and AUTO_INC_COL not in df.columns:
@@ -3477,27 +3505,19 @@ class Table:
         # immutable-column path still aggregates eagerly: its own
         # limit(1) probes would complete the observation over a
         # partially-consumed stream.
-        null_pk = None
-        for c in pk:
-            cond = F.col(c).isNull()
-            null_pk = cond if null_pk is None else (null_pk | cond)
-        checks = [F.sum(F.when(null_pk, 1).otherwise(0)).alias("nulls")]
+        checks = self._null_checks(st, pk)
         if has_auto:
             checks.append(F.min(AUTO_INC_COL).alias("min_auto"))
-        nn = self._null_violation_cond(st, [c for c in st.schema.names if c not in pk])
-        if nn is not None:
-            checks.append(F.sum(F.when(nn, 1).otherwise(0)).alias("nn"))
         imm = [c.name for c in st.schema.columns if c.immutable and c.name in df.columns]
         obs = None
         val_src = batch  # pre-dedup frame, kept for the rare re-validation
         if imm:
-            agg = batch.agg(*checks).collect()[0]
+            self._raise_null_violations(batch.agg(*checks).collect()[0].asDict())
         else:
             from pyspark.sql import Observation
 
             obs = Observation()
             batch = batch.observe(obs, *checks)
-            agg = None
         if order_col:
             w = Window.partitionBy(*pk).orderBy(F.desc(order_col))
             batch = (
@@ -3507,14 +3527,7 @@ class Table:
             )
         else:
             batch = batch.dropDuplicates(pk)
-        if agg is not None:
-            self._raise_upsert_violations(
-                agg.nulls, getattr(agg, "min_auto", None) if has_auto else None,
-                getattr(agg, "nn", None) if nn is not None else None)
         if imm:
-            import functools
-            import operator
-
             existing = self._snapshot_overlapping(st, batch).select(
                 *pk, *[F.col(c).alias(f"__old_{c}") for c in imm]
             ).withColumn("__exists", F.lit(True))
@@ -3540,52 +3553,22 @@ class Table:
                     for c in st.schema.names
                 ]
             )
-        entries = self._write_files(batch, st, seq_for(st.version + 1), "delta")
+        entries = self._write_files(batch, st, seq, "delta")
         if obs is not None:
             # the write job completed the observation; a violation
             # discards the (unpublished) staged files and errors —
             # externally identical to the pre-write rejection
-            vals = observed_metrics(obs)
-            if vals is None:
-                # unusable observation (failed/pruned execution):
-                # re-validate explicitly — one extra job, rare path
-                vals = val_src.agg(*checks).collect()[0].asDict()
             try:
-                self._raise_upsert_violations(
-                    vals.get("nulls"),
-                    vals.get("min_auto") if has_auto else None,
-                    vals.get("nn") if nn is not None else None)
-            except SchemaError:
+                vals = observed_metrics(obs)
+                if vals is None:
+                    # unusable observation (failed/pruned execution):
+                    # re-validate explicitly — one extra job, rare path
+                    vals = val_src.agg(*checks).collect()[0].asDict()
+                self._raise_null_violations(vals)
+            except BaseException:
                 self._discard(entries)
                 raise
-        v = self._commit_revalidated(
-            st, "upsert", entries,
-            lambda a: self.upsert(df, mode, handle_schema_drift, _attempts=a),
-            _attempts=_attempts,
-        )
-        self._maybe_auto_compact(sum(e.bytes for e in entries))
-        return v
-
-    @staticmethod
-    def _raise_upsert_violations(nulls, min_auto, nn) -> None:
-        """Shared between the eager (immutable-column) and observed
-        (write-job metric) validation paths of upsert."""
-        if nulls:
-            raise SchemaError(
-                f"batch holds {nulls} row(s) with NULL primary key"
-            )
-        if min_auto is not None and min_auto <= 0:
-            # row_operations.cc:543-546
-            raise SchemaError(
-                "auto-incrementing column value must be greater than zero"
-            )
-        if nn:
-            # row_operations.cc:559 — also catches an UPSERT omitting a
-            # non-nullable column whose declared default is NULL
-            raise SchemaError(
-                "NULL value not allowed for non-nullable column "
-                f"({nn} row(s))"
-            )
+        return entries, {}
 
     def upsert_ignore(self, df: DataFrame) -> int:
         return self.upsert(df, mode="ignore")
@@ -3596,6 +3579,21 @@ class Table:
         (tablet.cc:1052 MutateRowUnlocked)."""
         assert mode in ("error", "ignore")
         st = self.state()
+        staged = self._stage_update(st, df, mode, seq_for(st.version + 1))
+        if staged is None:
+            return st.version  # update_ignore dropped everything: no-op
+        entries, _ = staged
+        v = self._commit_revalidated(
+            st, "update", entries,
+            lambda a: self.update(df, mode, _attempts=a),
+            _attempts=_attempts,
+        )
+        self._maybe_auto_compact(sum(e.bytes for e in entries))
+        return v
+
+    def _stage_update(self, st: TableState, df: DataFrame, mode: str,
+                      seq: int) -> tuple[list[FileEntry], dict] | None:
+        """Returns None when UPDATE_IGNORE skips every SET column."""
         pk = st.schema.pk
         upd_cols = [c for c in df.columns if c not in pk]
         if not upd_cols:
@@ -3608,7 +3606,7 @@ class Table:
                     raise ImmutableColumnError(f"UPDATE of immutable column {c}")
                 upd_cols = [u for u in upd_cols if u != c]
         if not upd_cols:
-            return st.version  # update_ignore dropped everything: no-op
+            return None
         batch = df.select(
             *[_write_cast(F.col(c), st.schema.col(c).type).alias(c) for c in pk],
             *[_write_cast(F.col(c), st.schema.col(c).type).alias(f"__new_{c}") for c in upd_cols],
@@ -3621,14 +3619,8 @@ class Table:
         # (one combined limit(1), null violations ranked first so a
         # batch holding both still errors as InvalidArgument); ignore
         # mode rides the write job as an observed metric.
-        bad_null = None
-        for c in pk:
-            x = F.col(c).isNull()
-            bad_null = x if bad_null is None else (bad_null | x)
-        for c in upd_cols:
-            if not st.schema.col(c).nullable:
-                x = F.col(f"__new_{c}").isNull()
-                bad_null = x if bad_null is None else (bad_null | x)
+        bad_null = self._any_null(
+            [*pk, *[f"__new_{c}" for c in upd_cols if not st.schema.col(c).nullable]])
         obs = None
         val_src = batch
         if mode != "error":
@@ -3665,29 +3657,26 @@ class Table:
                 for c in st.schema.non_pk_names
             ],
         )
-        entries = self._write_files(rows, st, seq_for(st.version + 1), "delta")
+        entries = self._write_files(rows, st, seq, "delta")
         if obs is not None:
             # completed by the probe agg or the write job, never by a
             # short-circuiting action (no limit sits below the metric)
-            vals = observed_metrics(obs)
-            if vals is None:
-                vals = val_src.agg(
-                    F.sum(F.when(bad_null, 1).otherwise(0)).alias("bad")
-                ).collect()[0].asDict()
-            bad = vals.get("bad")
-            if bad:
+            try:
+                vals = observed_metrics(obs)
+                if vals is None:
+                    vals = val_src.agg(
+                        F.sum(F.when(bad_null, 1).otherwise(0)).alias("bad")
+                    ).collect()[0].asDict()
+                bad = vals.get("bad")
+                if bad:
+                    raise SchemaError(
+                        "NULL value not allowed for key or non-nullable "
+                        f"column ({bad} row(s))"
+                    )
+            except BaseException:
                 self._discard(entries)
-                raise SchemaError(
-                    "NULL value not allowed for key or non-nullable "
-                    f"column ({bad} row(s))"
-                )
-        v = self._commit_revalidated(
-            st, "update", entries,
-            lambda a: self.update(df, mode, _attempts=a),
-            _attempts=_attempts,
-        )
-        self._maybe_auto_compact(sum(e.bytes for e in entries))
-        return v
+                raise
+        return entries, {}
 
     def update_ignore(self, df: DataFrame) -> int:
         return self.update(df, mode="ignore")
@@ -3697,6 +3686,17 @@ class Table:
         writes PK tombstones as delta rows with __deleted=true."""
         assert mode in ("error", "ignore")
         st = self.state()
+        entries, _ = self._stage_delete(st, df, mode, seq_for(st.version + 1))
+        v = self._commit_revalidated(
+            st, "delete", entries,
+            lambda a: self.delete(df, mode, _attempts=a),
+            _attempts=_attempts,
+        )
+        self._maybe_auto_compact(sum(e.bytes for e in entries))
+        return v
+
+    def _stage_delete(self, st: TableState, df: DataFrame, mode: str,
+                      seq: int) -> tuple[list[FileEntry], dict]:
         pk = st.schema.pk
         keys = df.select(
             *[F.col(c).cast(st.schema.col(c).type).alias(c) for c in pk]
@@ -3715,14 +3715,7 @@ class Table:
                 for c in st.schema.non_pk_names
             ],
         ).withColumn(DEL_COL, F.lit(True))
-        entries = self._write_files(rows, st, seq_for(st.version + 1), "delta")
-        v = self._commit_revalidated(
-            st, "delete", entries,
-            lambda a: self.delete(df, mode, _attempts=a),
-            _attempts=_attempts,
-        )
-        self._maybe_auto_compact(sum(e.bytes for e in entries))
-        return v
+        return self._write_files(rows, st, seq, "delta"), {}
 
     def delete_ignore(self, df: DataFrame) -> int:
         return self.delete(df, mode="ignore")

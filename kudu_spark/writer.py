@@ -15,13 +15,14 @@ last-write-wins within a batch matches Kudu's apply order exactly
 from __future__ import annotations
 
 import os
+from dataclasses import replace
 from enum import Enum
 
 from pyspark.sql import functions as F
 
 from kudu_spark.errors import FlushFailedError, KuduSparkError
 from kudu_spark.meta import head_version as _head_version
-from kudu_spark.table import AUTO_INC_COL, Table
+from kudu_spark.table import AUTO_INC_COL, Table, seq_for
 
 
 class FlushMode(Enum):
@@ -393,32 +394,47 @@ class Session:
 class Transaction:
     """Accumulates DataFrame-level ops; commit() publishes them as ONE
     atomic log entry (all-or-nothing visibility). Rollback discards
-    staged files. Mirrors KuduTransaction::Commit/Rollback."""
+    staged files. Mirrors KuduTransaction::Commit/Rollback.
+
+    Every op stages through the same ``Table._stage_<op>`` step as the
+    direct op, so it validates exactly like it (Kudu applies a
+    transaction's writes as ordinary row ops, tablet/tablet.cc:836).
+    Ops read the table's current snapshot — no read-your-writes inside
+    the transaction — and apply in staging order inside the commit."""
 
     def __init__(self, table: Table):
         self.table = table
         self._staged: list[tuple] = []  # (op, entries)
         self._insert_entries: list = []  # base files staged by insert()
-        self._stage_version: int | None = None  # state version validations saw
+        self._props: dict = {}  # props the commit publishes (auto_inc_next)
+        self._stage_version: int | None = None  # version the first op validated against
+        self._auto_inc_seen = None  # committed auto_inc_next at that version
         self._open = True
 
-    def _stage(self, op: str, df, kind: str, prepare) -> None:
+    def _stage(self, op: str, df, check=None) -> list:
         if not self._open:
             raise KuduSparkError("transaction is closed")
         st = self.table.state()
-        self._stage_version = st.version
-        batch = prepare(st, df)
-        from kudu_spark.table import seq_for
-
-        entries = self.table._write_files(
-            batch, st, seq_for(st.version + 1, sub=len(self._staged)), kind
-        )
+        if self._stage_version is None:
+            self._stage_version = st.version
+            self._auto_inc_seen = st.props.get("auto_inc_next")
+        # the txn's own reservations carry to its later ops: a second
+        # insert continues from the running auto_inc_next
+        st = replace(st, props={**st.props, **self._props})
+        entries, props = getattr(self.table, f"_stage_{op}")(
+            st, df, "error", seq_for(st.version + 1, sub=len(self._staged)))
+        if check is not None:
+            try:
+                check(st, entries)
+            except BaseException:
+                self.table._discard(entries)
+                raise
         self._staged.append((op, entries))
+        self._props.update(props)
+        return entries
 
-    def _staged_insert_keys(self, st):
-        import os
-
-        paths = [self.table._data_path(e.path) for e in self._insert_entries]
+    def _staged_keys(self, st, entries):
+        paths = [self.table._data_path(e.path) for e in entries]
         return self.table.spark.read.parquet(*paths).select(*st.schema.pk)
 
     def insert(self, df) -> None:
@@ -428,102 +444,32 @@ class Transaction:
         revalidate per row at apply, tablet/tablet.cc:836). This is
         also the invariant the merge-on-read broadcast fast path relies
         on: keys untouched by deltas are unique across base files."""
-        holder = {}
+        from kudu_spark.errors import DuplicateKeyError
 
-        def prep(st, d):
-            from kudu_spark.errors import DuplicateKeyError, SchemaError
-
-            b = holder["b"] = self.table._validate_batch(st, d).persist()
+        def not_staged_before(st, entries):
             pk = st.schema.pk
-            null_pk = None
-            for c in pk:
-                cond = F.col(c).isNull()
-                null_pk = cond if null_pk is None else (null_pk | cond)
-            nn = self.table._null_violation_cond(
-                st, [c for c in st.schema.names if c not in pk]
+            if not (self._insert_entries and entries) or AUTO_INC_COL in pk:
+                return  # nothing to collide with; fresh auto-increment ids never do
+            hit = (
+                self._staged_keys(st, entries)
+                .join(self._staged_keys(st, self._insert_entries), on=pk, how="left_semi")
+                .limit(1).collect()
             )
-            checks = [
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct(*[F.col(c) for c in pk]).alias("nd"),
-                F.sum(F.when(null_pk, 1).otherwise(0)).alias("nulls"),
-            ]
-            if nn is not None:
-                checks.append(F.sum(F.when(nn, 1).otherwise(0)).alias("nn"))
-            agg = b.agg(*checks).collect()[0]
-            if agg.nulls:
-                raise SchemaError(f"batch holds {agg.nulls} row(s) with NULL primary key")
-            if nn is not None and agg.nn:
-                raise SchemaError(
-                    "NULL value not allowed for non-nullable column "
-                    f"({agg.nn} row(s))"
-                )
-            if agg.n != agg.nd:
+            if hit:
                 raise DuplicateKeyError(
-                    f"batch contains {agg.n - agg.nd} duplicate primary key(s)"
+                    f"key already inserted in this transaction: {hit[0].asDict()}"
                 )
-            if st.files:
-                # presence-sidecar short circuit (tables with
-                # pk_bloom_cols == pk): keys failing every commit
-                # bloom are PROVABLY absent — the common case for
-                # append-only ingest — so the exact probe scan is
-                # skipped entirely (Kudu's per-rowset bloom check
-                # before the B-tree seek, tablet/tablet.cc:116-124);
-                # bloom-positives narrow the exact probe to themselves
-                cand = self.table.present_key_probe(b.select(*pk), pk, st)
-                if cand is not None and not cand.limit(1).collect():
-                    hit = []
-                else:
-                    src = b if cand is None else cand
-                    hit = (
-                        src.join(self.table._existing_pks(st, src), on=pk,
-                                 how="left_semi")
-                        .limit(1).collect()
-                    )
-                if hit:
-                    raise DuplicateKeyError(f"key already present: {hit[0].asDict()}")
-            if self._insert_entries:
-                hit = (
-                    b.join(self._staged_insert_keys(st), on=pk, how="left_semi")
-                    .limit(1).collect()
-                )
-                if hit:
-                    raise DuplicateKeyError(
-                        f"key already inserted in this transaction: {hit[0].asDict()}"
-                    )
-            return b
 
-        try:
-            self._stage("insert", df, "base", prep)
-        finally:
-            if "b" in holder:
-                try:
-                    holder["b"].unpersist()
-                except Exception:
-                    pass
-        self._insert_entries.extend(self._staged[-1][1])
+        self._insert_entries.extend(self._stage("insert", df, not_staged_before))
 
     def upsert(self, df) -> None:
-        def prep(st, d):
-            b = self.table._validate_batch(st, d)
-            return b.dropDuplicates(st.schema.pk)
+        self._stage("upsert", df)
 
-        self._stage("upsert", df, "delta", prep)
+    def update(self, df) -> None:
+        self._stage("update", df)
 
     def delete(self, df) -> None:
-        def prep(st, d):
-            pk = st.schema.pk
-            keys = d.select(
-                *[F.col(c).cast(st.schema.col(c).type).alias(c) for c in pk]
-            ).dropDuplicates(pk)
-            return keys.select(
-                *pk,
-                *[
-                    F.lit(None).cast(st.schema.col(c).type).alias(c)
-                    for c in st.schema.non_pk_names
-                ],
-            ).withColumn("__deleted", F.lit(True))
-
-        self._stage("delete", df, "delta", prep)
+        self._stage("delete", df)
 
     def commit(self) -> int:
         if not self._open:
@@ -552,8 +498,13 @@ class Transaction:
             # other writers committed since, re-probe before publishing
             # (Kudu txns likewise fail at commit on conflicting rows)
             if self._insert_entries and st.version != self._stage_version:
+                if ("auto_inc_next" in self._props
+                        and st.props.get("auto_inc_next") != self._auto_inc_seen):
+                    self.rollback()  # our reserved ids may be taken
+                    raise ConcurrentCommitError(
+                        "auto-increment ids reserved concurrently during transaction")
                 pk = st.schema.pk
-                keys = self._staged_insert_keys(st)
+                keys = self._staged_keys(st, self._insert_entries)
                 hit = (
                     keys.join(self.table._existing_pks(st, keys), on=pk, how="left_semi")
                     .limit(1).collect()
@@ -566,7 +517,7 @@ class Transaction:
                 self._stage_version = st.version
             try:
                 return self.table._commit(
-                    st, "txn", entries, retries=1,
+                    st, "txn", entries, retries=1, props=self._props or None,
                     extra={"txn_id": txn_id} if txn_id else None,
                 )
             except ConcurrentCommitError:
@@ -740,6 +691,9 @@ class EngineTransaction:
     def upsert(self, table_name: str, df) -> None:
         self._txn(table_name).upsert(df)
 
+    def update(self, table_name: str, df) -> None:
+        self._txn(table_name).update(df)
+
     def delete(self, table_name: str, df) -> None:
         self._txn(table_name).delete(df)
 
@@ -777,6 +731,7 @@ class EngineTransaction:
                     # commits), never O(history)
                     "staged_at": _head_version(t.table.root) or 0,
                     "entries": [e.to_json() for _, es in t._staged for e in es],
+                    "props": t._props,
                 }
                 for n, t in parts.items()
             },
@@ -905,7 +860,8 @@ class EngineTransaction:
                     try:
                         entries = [FileEntry.from_json(e) for e in part["entries"]]
                         t = engine.table(tname)
-                        t._commit(t.state(), "txn", entries, extra={"txn_id": txn_id})
+                        t._commit(t.state(), "txn", entries, props=part.get("props") or None,
+                                  extra={"txn_id": txn_id})
                     except Exception:
                         ok = False
                 if ok:
