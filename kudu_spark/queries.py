@@ -16,6 +16,7 @@ live in kudu_spark.engine and are exercised by the mutation queries.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,8 +62,27 @@ def query(name: str, oracle: str | None = None, gated: bool = True):
 # schema skips that job (12-25 ms). This caches ONLY the inferred
 # StructType per parquet path — exactly what a metastore/catalog holds.
 # No data, no query results, and no plan state are cached: every
-# execution still scans the parquet files.
-_SCHEMA_CACHE: dict[str, object] = {}
+# execution still scans the parquet files. An entry is valid only for
+# the dataset files it was inferred from (names, sizes, mtimes), so a
+# regenerated dataset re-infers instead of reading NULLs for columns
+# the cached schema names.
+_SCHEMA_CACHE: dict[str, tuple[object, object]] = {}
+
+
+def _dataset_fingerprint(path: str) -> tuple | None:
+    """(relative name, size, mtime_ns) of every file of a local parquet
+    dataset, or None when ``path`` lists no local files (the schema is
+    then inferred on every load)."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for d, _, names in os.walk(path):
+        for n in names:
+            f = os.path.join(d, n)
+            st = os.stat(f)
+            out.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out)) or None
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -72,11 +92,13 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         # reader rejects; read as long and truncate to micros (lossless
         # here — the generator emits whole-microsecond values).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = _SCHEMA_CACHE.get(path)
-    if schema is None:
+    fp = _dataset_fingerprint(path)
+    fp_cached, schema = _SCHEMA_CACHE.get(path, (None, None))
+    if fp is None or fp != fp_cached:
         df = spark.read.parquet(path)
         schema = df.schema
-        _SCHEMA_CACHE[path] = schema
+        if fp is not None:
+            _SCHEMA_CACHE[path] = (fp, schema)
     else:
         df = spark.read.schema(schema).parquet(path)
     if table == "events" and any(

@@ -2312,6 +2312,11 @@ class Table:
                 z = z.bitwiseOR(F.shiftleft(bit, i * n + j))
         return df.withColumn("__zv", z)
 
+    # adaptive PK bloom size candidates per data file, halving from
+    # parquet-mr's 1 MiB maximum: the 11th is 1 KiB, the smallest
+    # parquet-mr builds (it sizes candidates in steps of 500 keys)
+    PK_BLOOM_CANDIDATES = 11
+
     def _write_files(
         self, df: DataFrame, st: TableState, seq: int, kind: str,
         size_hint_bytes: int | None = None,
@@ -2469,12 +2474,20 @@ class Table:
         # PK bloom filters in every data file: the write-path existence
         # probe (_snapshot_overlapping) and point-lookup scans skip row
         # groups whose bloom rejects the key — Kudu's per-rowset bloom
-        # (tablet/tablet.cc:116-124, cfile/bloomfile.cc)
-        # adaptive sizing: the bloom is sized by the observed NDV
-        # instead of the 1 MB-per-row-group default (parquet-mr 1.16)
+        # (tablet/tablet.cc:116-124, cfile/bloomfile.cc), which grows
+        # with the keys it holds. Adaptive sizing picks the smallest
+        # candidate that holds the file's NDV at the default 1% fpp.
+        # parquet-mr's default of 5 candidates stops at 64 KiB, which
+        # dwarfs a small delta file and pushed small upserts past
+        # AUTO_COMPACT_MIN_DELTA_BYTES on bloom padding alone;
+        # PK_BLOOM_CANDIDATES sizes each bloom to its rows (~1 KiB for
+        # up to 500 keys). Files written before keep their blooms until
+        # compaction rewrites them.
         writer = writer.option("parquet.bloom.filter.adaptive.enabled", "true")
         for c in pk_cols:
             writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
+            writer = writer.option(f"parquet.bloom.filter.candidates.number#{c}",
+                                   str(self.PK_BLOOM_CANDIDATES))
         # per-column storage attributes (ColumnSchemaPB,
         # common.proto:134-170; cfile/type_encodings.cc:129-233) mapped
         # to parquet writer knobs: PLAIN disables the dictionary for

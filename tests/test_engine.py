@@ -981,6 +981,45 @@ def test_write_proportional_budget_drains_inline(engine, spark):
     assert t.scan().where(F.col("s") == "y").count() == 15_000
 
 
+def test_small_upsert_skips_inline_compaction(engine, spark):
+    """A 1k-row upsert on a 50k-row 4-hash x 4-range table with default
+    properties writes ~70 KB of deltas, under the 1 MiB
+    auto_compact_min_delta_bytes floor, so it commits one version and
+    no compaction. With 64 KiB of PK bloom per delta file its 16 files
+    crossed the floor on padding alone and every small upsert rewrote
+    the whole table inline."""
+    import numpy as np
+
+    from kudu_spark.meta import read_log
+
+    n = 50_000
+    t = engine.create_table(
+        "ing", [("k", "bigint", False), ("a", "int", True), ("b", "double", True),
+                ("s", "string", True)], pk=["k"],
+        hash_partitions=[{"columns": ["k"], "buckets": 4}],
+        range_partition={"column": "k", "splits": [n // 4, n // 2, 3 * n // 4]},
+    )
+    t.insert(spark.range(n).select(
+        F.col("id").alias("k"), (F.col("id") % 1000).cast("int").alias("a"),
+        (F.col("id") / 7).alias("b"), F.hex(F.xxhash64("id")).alias("s")))
+    v0 = t.version
+    # 1000 keys, ~80% from the newest tenth of the key space: every
+    # one of the 16 partitions gets a delta file
+    rng = np.random.default_rng(1)
+    recent = rng.binomial(1000, 0.8)
+    keys = np.unique(np.concatenate([rng.integers(n - n // 10, n, recent),
+                                     rng.integers(0, n, 1000 - recent)]))
+    v = t.upsert(spark.createDataFrame(
+        [(int(k), -1, 0.5, "u") for k in keys], "k bigint, a int, b double, s string"))
+    assert v == v0 + 1 == t.version
+    assert [c["op"] for c in read_log(t.root, min_version=v0)] == ["upsert"]
+    st = t.state()
+    deltas = [f for f in st.files if f.kind == "delta"]
+    assert len(deltas) == 16
+    assert sum(f.bytes for f in deltas) < table_mod.Table.AUTO_COMPACT_MIN_DELTA_BYTES
+    assert t.scan(filters=[("s", "=", "u")]).count() == len(keys)
+
+
 def test_removed_property_rejected(engine):
     engine.create_table("rp", SIMPLE, pk=["key"])
     assert len(REMOVED_PROPERTIES) == 8

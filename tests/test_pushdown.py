@@ -186,30 +186,105 @@ def test_out_of_range_write_rejected(engine, spark):
     assert all(not n.startswith("_staging") for n in os.listdir(data))
 
 
-def test_pk_bloom_filters_written(engine, spark):
-    """Data files carry parquet bloom filters on PK columns
-    (cfile/bloomfile.cc parity; probed by the parquet reader when an
-    IN/= predicate is pushed)."""
+def _bloom_lengths(spark, t, f) -> dict:
+    """Column path -> bloom filter bytes summed over the file's row
+    groups (0 when the column carries no bloom)."""
     import os
 
-    t = engine.create_table("bloomy", SCHEMA, pk=["k"])
-    t.insert(spark.createDataFrame([(k, k, f"s{k}") for k in range(1000)],
-                                   "k bigint, v int, s string"))
-    f = t.state().files[0]
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path("file://" + os.path.join(t.root, f.path))
     infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         hpath, spark._jsc.hadoopConfiguration()
     )
     reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
+    out: dict = {}
     try:
-        offsets = {}
-        for col in reader.getFooter().getBlocks().get(0).getColumns():
-            offsets[col.getPath().toDotString()] = col.getBloomFilterOffset()
+        for block in reader.getFooter().getBlocks():
+            for col in block.getColumns():
+                n = col.getBloomFilterLength() if col.getBloomFilterOffset() >= 0 else 0
+                name = col.getPath().toDotString()
+                out[name] = out.get(name, 0) + n
     finally:
         reader.close()
-    assert offsets.get("k", -1) >= 0, f"no bloom filter on PK column: {offsets}"
-    assert offsets.get("v", -1) < 0, "bloom unexpectedly enabled on non-PK column"
+    return out
+
+
+def test_pk_bloom_filters_written(engine, spark):
+    """Data files carry parquet bloom filters on PK columns only
+    (cfile/bloomfile.cc parity; probed by the parquet reader when an
+    IN/= predicate is pushed), each sized to the file's rows: a 1000-row
+    insert's files stay under 4 KiB and a 10-row delta's under 2 KiB,
+    where the 5-candidate adaptive default wrote >= 64 KiB per file."""
+    t = engine.create_table("bloomy", SCHEMA, pk=["k"])
+    t.insert(spark.createDataFrame([(k, k, f"s{k}") for k in range(1000)],
+                                   "k bigint, v int, s string"))
+    bases = t.state().files
+    assert bases and all(f.kind == "base" for f in bases)
+    for f in bases:
+        lens = _bloom_lengths(spark, t, f)
+        assert 0 < lens["k"] <= 4096, f"PK bloom not sized to rows: {lens}"
+        assert lens["v"] == lens["s"] == 0, f"bloom on a non-PK column: {lens}"
+    t.upsert(spark.createDataFrame([(k, -k, "u") for k in range(0, 1000, 100)],
+                                   "k bigint, v int, s string").coalesce(1))
+    deltas = [f for f in t.state().files if f.kind == "delta"]
+    assert len(deltas) == 1, [f.path for f in t.state().files]
+    lens = _bloom_lengths(spark, t, deltas[0])
+    assert 0 < lens["k"] <= 2048, f"10-row delta bloom not sized to rows: {lens}"
+    assert lens["v"] == lens["s"] == 0, lens
+
+
+def test_point_lookups_exact_over_small_deltas(engine, spark):
+    """Per-file PK blooms sized to a handful of rows must never reject
+    a key the file holds: with compaction off, '=' and IN-list scans
+    over a base plus ten small upsert/delete deltas return exactly what
+    a dict model says, for present, updated, deleted and never-written
+    keys."""
+    import random
+
+    ddl = "k bigint, v int, s string"
+    t = engine.create_table(
+        "exact", SCHEMA, pk=["k"],
+        hash_partitions=[{"columns": ["k"], "buckets": 4}],
+        range_partition={"column": "k", "splits": [250, 500, 750]},
+    )
+    engine.alter_table("exact").set_property("auto_compact", "false").apply()
+    t = engine.table("exact")
+    t.insert(spark.createDataFrame([(k, k, f"s{k}") for k in range(1000)], ddl))
+    model = {k: (k, f"s{k}") for k in range(1000)}
+    touched, deleted = set(), set()
+    rng = random.Random(7)
+    for i in range(10):
+        if i % 3 == 2:
+            keys = rng.sample(sorted(model), rng.randint(5, 20))
+            t.delete(spark.createDataFrame([(k,) for k in keys], "k bigint"))
+            for k in keys:
+                del model[k]
+            deleted.update(keys)
+        else:
+            keys = sorted({rng.randrange(1100) for _ in range(rng.randint(10, 30))})
+            t.upsert(spark.createDataFrame([(k, i * 10_000 + k, f"u{i}") for k in keys], ddl))
+            for k in keys:
+                model[k] = (i * 10_000 + k, f"u{i}")
+            touched.update(keys)
+    assert sum(f.kind == "delta" for f in t.state().files) >= 10
+    deleted -= set(model)  # a later upsert may re-insert a deleted key
+    untouched = sorted(set(range(1000)) - touched - deleted)
+    never = sorted(set(range(1000, 1100)) - touched) + [-1, 5_000, 1 << 40]
+    updated = sorted(touched & set(model))
+    assert untouched and updated and deleted and never
+    probes = (rng.sample(untouched, 3) + rng.sample(updated, 3)
+              + rng.sample(sorted(deleted), 3) + never[:2] + never[-3:])
+
+    def want(keys):
+        return sorted((k, *model[k]) for k in keys if k in model)
+
+    for k in probes:
+        got = sorted(tuple(r) for r in t.scan(filters=[("k", "=", k)]).collect())
+        assert got == want([k]), f"k={k}: {got} != {want([k])}"
+    inlist = (rng.sample(untouched, 10) + updated[:10] + sorted(deleted)[:10]
+              + never[:5] + never[-3:])
+    got = sorted(tuple(r) for r in t.scan(filters=[("k", "in", inlist)]).collect())
+    assert got == want(inlist)
 
 
 def test_vectorized_reader_and_codegen(table):

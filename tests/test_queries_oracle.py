@@ -74,3 +74,24 @@ def test_readme_registry_count_matches():
     assert int(m.group(1)) == len(REGISTRY), (
         f"README says {m.group(1)} registered queries; "
         f"REGISTRY has {len(REGISTRY)} — update README.md")
+
+
+def test_load_reinfers_schema_of_regenerated_dataset(spark, tmp_path):
+    """queries.load() caches the inferred parquet schema per path, but
+    only for the dataset files it was inferred from: regenerating the
+    dataset with a renamed column re-infers the schema instead of
+    returning the old column's name with NULL values."""
+    import shutil
+
+    from kudu_spark.queries import load
+
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, old string") \
+        .write.parquet(path)
+    assert sorted(tuple(r) for r in load(spark, str(tmp_path), "t").collect()) == \
+        [(1, "a"), (2, "b")]
+    shutil.rmtree(path)
+    spark.createDataFrame([(3, "c")], "id bigint, new string").write.parquet(path)
+    df = load(spark, str(tmp_path), "t")
+    assert df.columns == ["id", "new"]
+    assert [tuple(r) for r in df.collect()] == [(3, "c")]
